@@ -313,6 +313,20 @@ object DedupQueries {
       ngramJaccardPairs(documents(s, d), threshold)
     }
 
+  /** Materialize a (memoized, persisted) frame on the common pool so an
+    * independent job overlaps it (guide §2.6). A non-fatal failure is
+    * dropped: the frame is lazy, so its consumer recomputes it and
+    * surfaces the same error through the normal path. An interrupt is
+    * handed back to the worker thread; fatal errors propagate.
+    */
+  private def prefetch(df: DataFrame)
+      : java.util.concurrent.CompletableFuture[Void] =
+    java.util.concurrent.CompletableFuture.runAsync(() =>
+      try { df.count(); () } catch {
+        case _: InterruptedException => Thread.currentThread().interrupt()
+        case scala.util.control.NonFatal(_) => ()
+      })
+
   /** The dd13/dd14 two-epoch ShingleIndex over `d`, built once per run
     * scope ([[SessionCaches.memoValue]] holds the scratch dir;
     * [[SessionCaches.memo]] holds each epoch's materialized pair
@@ -351,8 +365,7 @@ object DedupQueries {
       val p0 = SessionCaches.memo(s, s"minhash-pairs|$d|0") {
         graft.operators.DedupIndex.epochPairs(s, ix, 0L)
       }
-      val pre = java.util.concurrent.CompletableFuture.runAsync(() =>
-        try { p0.count(); () } catch { case _: Throwable => () })
+      val pre = prefetch(p0)
       graft.operators.DedupIndex.appendEpoch(s, ix, 1L,
         docs.filter(pmod(col("doc_id"), lit(2)) === 1))
       pre.join()
@@ -537,13 +550,8 @@ object DedupQueries {
       // CONCURRENT jobs before folding (guide §2.6): the folds must run
       // serially (fold 1 reads fold 0's committed state), but the pair
       // computations are independent of the cluster dir — overlapping
-      // them takes the pair stage to max(p0, p1) instead of p0 + p1.
-      // A failure here is swallowed: the frames are lazy, so the fold
-      // recomputes and surfaces the same error through the normal path.
-      val pre = Seq(p0, p1).map(p =>
-        java.util.concurrent.CompletableFuture.runAsync(() =>
-          try { p.count(); () } catch { case _: Throwable => () }))
-      pre.foreach(_.join())
+      // them takes the pair stage to max(p0, p1) instead of p0 + p1
+      Seq(p0, p1).map(prefetch).foreach(_.join())
       Seq(p0, p1).zipWithIndex.foreach { case (pairs, e) =>
         graft.operators.ClusterIndex.foldEpoch(s, clDir, e.toLong,
           pairs.select(col("doc_a"), col("doc_b")))

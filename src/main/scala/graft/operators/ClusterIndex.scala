@@ -60,42 +60,19 @@ import org.apache.spark.sql.functions._
 object ClusterIndex {
 
   /** Current (latest-per-node) labels of the entries strictly older
-    * than `before` (all committed entries when None). Mirror-era
-    * indexes (entries written through [[DedupIndex
-    * .appendFrameWithMirrors]] with the node key — every index this
-    * object creates) resolve supersession with broadcast anti-joins
-    * against the tiny resigned/ lists: the state side is ONE narrow
-    * (node, label) scan crossing ZERO exchanges. That was the round-5
-    * verdict's one `weak`: the legacy path below — kept for dirs whose
-    * entries predate the mirrors, and as the A/B anchor
-    * ([[graft.bench.ClusterFoldBench]] `forceLegacy`) — pays a
-    * latest-per-node groupBy + join-back over the WHOLE O(corpus)
-    * label table on every fold and every read.
+    * than `before` (all committed entries when None). Every entry
+    * carries a node-keyed resigned/ mirror, so [[DedupIndex.liveRows]]
+    * resolves supersession with broadcast anti-joins: the state side is
+    * ONE narrow (node, label) scan crossing ZERO exchanges, never a
+    * latest-per-node groupBy + join-back over the whole O(corpus) label
+    * table.
     */
   private[graft] def liveLabels(spark: SparkSession, dir: String,
-                                before: Option[Long],
-                                forceLegacy: Boolean = false): DataFrame = {
-    val m = DedupIndex.loadManifest(dir)
-    val entries = before match {
-      case Some(e) => DedupIndex.priorEntries(dir, e)
-      case None => m.entries
-    }
-    require(entries.nonEmpty, s"cluster index at $dir has no committed epochs")
-    val mirrored = !forceLegacy &&
-      m.features.contains(DedupIndex.MirrorFeature)
-    val base =
-      if (mirrored)
-        DedupIndex.dropSuperseded(
-          spark.read.parquet(entries.map(e => s"$dir/${e.path}"): _*),
-          spark.emptyDataFrame.select(lit(0L).as("node")).limit(0),
-          DedupIndex.resignedLists(spark, dir, entries),
-          keyCol = "node")
-      else
-        DedupIndex.latestSigs(
-          DedupIndex.readSigs(spark, dir,
-            entries.flatMap(e => e.minEpoch to e.maxEpoch)), "node")
-    base.select(col("node"), col("label"))
-  }
+                                before: Option[Long]): DataFrame =
+    DedupIndex.liveRows(spark, dir, before, keyCol = "node")()
+      .getOrElse(throw new IllegalArgumentException(
+        s"cluster index at $dir has no committed epochs"))
+      .select(col("node"), col("label"))
 
   /** Current labels: (node, label), latest-per-node. */
   def readLabels(spark: SparkSession, dir: String): DataFrame =
@@ -113,7 +90,7 @@ object ClusterIndex {
     val p = pairs.select(col(cSrc).as("src"), col(cDst).as("dst"))
     val prior = DedupIndex.committedEpochs(dir).filter(_ < epochId)
     // the persisted intermediates below are read by several consumers
-    // AND by appendFrame's write at the end, so they are released only
+    // AND by the append's write at the end, so they are released only
     // after the commit (an evicted block recomputes — slow, never wrong)
     var hot = List.empty[DataFrame]
     def keep(df: DataFrame): DataFrame = { hot ::= df.persist(); df }
@@ -132,11 +109,8 @@ object ClusterIndex {
           // zero edges → empty labels) without a separate action
           ownCc(ConnectedComponents.run(spark, p).labels)
         case _ =>
-          // state resolution is one narrow (node, label) scan — the
-          // mirror-era path in [[liveLabels]] crosses zero exchanges
-          // (round-6: previously a latest-per-node groupBy + join-back
-          // over the whole label table, ~1.5 s at the 250k bench shape
-          // and O(corpus) exchanged per epoch at scale). Read by four
+          // state resolution is one narrow (node, label) scan that
+          // crosses zero exchanges ([[liveLabels]]). Read by four
           // consumers below; same for the epoch's edge and endpoint
           // frames — persist each once per fold
           val state = keep(liveLabels(spark, dir, Some(epochId)))
@@ -182,8 +156,7 @@ object ClusterIndex {
       // node-unique by construction (newRows ∩ relabeled = ∅, one row
       // per node in each), so the sidecar skips its dedup pass
       DedupIndex.appendFrameWithMirrors(spark, dir, epochId,
-        delta.withColumn("_sig_epoch", lit(epochId)),
-        List(DedupIndex.MirrorFeature), keyCol = "node",
+        delta.withColumn("_sig_epoch", lit(epochId)), keyCol = "node",
         keysAreDistinct = true)
     } finally hot.foreach(_.unpersist(blocking = false))
   }

@@ -87,9 +87,8 @@ object DedupIndex {
     * set at FIRST-epoch commit and carried forward verbatim (json4s
     * default-arg evolution — older manifests read as Nil). A feature
     * set mid-life would lie about the older entries, so writers only
-    * establish features on an empty index; readers gate fast paths on
-    * them and fall back otherwise ([[ShingleIndex.epochPairs]]'s
-    * "resigned-mirrors").
+    * establish features on an empty index; [[liveRows]] refuses to read
+    * an index without [[MirrorFeature]].
     */
   final case class IndexManifest(version: Long, entries: List[IndexEntry],
                                  features: List[String] = Nil) {
@@ -100,10 +99,11 @@ object DedupIndex {
   }
 
   /** Manifest feature: every entry of this index carries a resigned/
-    * mirror, so readers may resolve supersession with broadcast
-    * anti-joins instead of a latest-per-key groupBy over the whole
-    * store. Established at FIRST-epoch commit only (see
-    * [[IndexManifest.features]]).
+    * mirror, so supersession resolves with broadcast anti-joins instead
+    * of a latest-per-key groupBy over the whole store. Every modality
+    * establishes it at FIRST-epoch commit (see
+    * [[IndexManifest.features]]); an index without it predates the
+    * mirrors and must be rebuilt ([[requireMirrors]]).
     */
   val MirrorFeature = "resigned-mirrors"
 
@@ -316,8 +316,8 @@ object DedupIndex {
     * is overwritten by the retry — only the manifest defines existence.
     *
     * `deletes` (doc_id rows), when given, commit TOMBSTONE signatures
-    * for docs deleted in this epoch: an all-null signature row that the
-    * latest-per-doc resolution picks up and the live filters drop — so
+    * for docs deleted in this epoch: an all-null signature row that
+    * supersedes the doc's older signature and the live filters drop — so
     * a deleted url's signature stops generating pairs the moment its
     * delete epoch lands (round-4 advice: before this, op='D' rows were
     * filtered at the sink and a deleted doc kept pairing forever).
@@ -326,12 +326,9 @@ object DedupIndex {
   def appendEpoch(spark: SparkSession, dir: String, epochId: Long,
                   docs: DataFrame,
                   deletes: Option[DataFrame] = None): Boolean = {
-    val m = loadManifest(dir)
-    if (m.isCommitted(epochId)) return false
     // `_sig_epoch` provenance column: a doc RE-SIGNED in a later epoch
     // (an updated url on the streaming path) supersedes its older
-    // signature — readers resolve latest-per-doc ([[latestSigs]]), the
-    // index's LWW
+    // signature through the resigned/ mirror ([[liveRows]])
     val live = DedupQueries.minhashSignatures(docs)
     val sigs = (deletes match {
       case None => live
@@ -341,109 +338,72 @@ object DedupIndex {
             .map(i => lit(null).cast("long").as(s"mh_$i"))): _*)
         live.unionByName(tomb)
     }).withColumn("_sig_epoch", lit(epochId))
-    // one text pass: write the signature rows, then derive the bucket
-    // side table and the resigned list from the WRITTEN parquet
-    val tmpSigs = sigsRoot(dir).resolve(s".tmp-epoch-$epochId")
-    Files.createDirectories(sigsRoot(dir))
-    sigs.write.mode("overwrite").parquet(tmpSigs.toString)
-    val back = spark.read.parquet(tmpSigs.toString)
-    // The three side artifacts below all derive from the WRITTEN sig
-    // parquet and share no state — they run as concurrent jobs
-    // ([[inParallel]]) so the append's wall is the slowest of them,
-    // not their sum (guide §2.6; each is a small job whose
-    // scheduling/commit tail would otherwise leave executors idle).
-    val tmpB = bucketsRoot(dir).resolve(s".tmp-epoch-$epochId")
-    val tmpRRef = new java.util.concurrent.atomic.AtomicReference[Option[Path]](None)
-    inParallel(Seq(
-      // buckets/: band rows partitioned by directory bucket — the
-      // fold's pruned+broadcast candidate join reads only matching sb
-      // dirs
-      () => {
-        Files.createDirectories(bucketsRoot(dir))
-        bucketRows(back).write.mode("overwrite")
-          .partitionBy("sb").parquet(tmpB.toString)
-      },
-      // bloom/: the entry's doc_id set as a serialized Bloom sidecar —
-      // prunes every FUTURE epoch's resigned-overlap scan (below) to
-      // the entries that might share a doc with it
-      () => writeBloomSidecar(dir, s"sigs/epoch=$epochId", back, "doc_id",
-        keysAreDistinct = true),
-      // resigned/: (doc_id, last = this epoch) for docs the index
-      // already knows (re-signs AND tombstones of indexed docs) — the
-      // fold's broadcast supersession filter, replacing a full-index
-      // latest-per-doc shuffle. Derived by a narrow doc_id-column scan
-      // of the prior sigs against the broadcast epoch id set — pruned
-      // by the PRIOR entries' Bloom sidecars to entries that might
-      // overlap, so on a fresh-doc feed NO prior bytes are read and no
-      // mirror is written (absence reads as empty, same as a first
-      // epoch's missing list).
-      () => {
-        val overlap = overlappingEntries(spark, dir, m.entries,
-          back.select(col("doc_id")), "doc_id")
-        if (overlap.nonEmpty) {
-          val tmp = resignedRoot(dir).resolve(s".tmp-epoch-$epochId")
-          Files.createDirectories(resignedRoot(dir))
-          spark.read.parquet(overlap.map(e => s"$dir/${e.path}"): _*)
-            .select(col("doc_id"))
-            .join(broadcast(back.select(col("doc_id")).distinct()),
-              Seq("doc_id"), "left_semi")
-            .distinct()
-            .withColumn("last", lit(epochId))
-            .write.mode("overwrite").parquet(tmp.toString)
-          // a Bloom false positive can select entries that share
-          // nothing: never publish an EMPTY mirror (absence already
-          // means empty, and keeps vacuum/reader dir counts
-          // deterministic)
-          if (spark.read.parquet(tmp.toString).head(1).isEmpty)
-            graft.FsUtil.deleteTree(tmp)
-          else tmpRRef.set(Some(tmp))
-        }
-      }))
-    val tmpR = tmpRRef.get()
-    // publish all three, then commit — a crash before the manifest swap
-    // leaves only orphans the retry overwrites
-    def publish(tmp: Path, rel: String): Unit = {
-      val dst = Paths.get(dir, rel)
-      graft.FsUtil.deleteTree(dst)
-      Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-    }
-    publish(tmpB, s"buckets/epoch=$epochId")
-    tmpR.foreach(publish(_, s"resigned/epoch=$epochId"))
-    publish(tmpSigs, s"sigs/epoch=$epochId")
-    commitManifest(dir, IndexManifest(m.version + 1,
-      m.entries :+ IndexEntry(epochId, epochId, s"sigs/epoch=$epochId"),
-      m.features), m.version)
-    true
+    appendFrameWithMirrors(spark, dir, epochId, sigs, keysAreDistinct = true)
   }
 
-  /** [[appendFrame]] plus the broadcast-supersession mirror set: the
-    * entry's doc_id Bloom sidecar and its resigned/ list (docs this
-    * epoch re-signs or tombstones that the index already holds), the
-    * prior scan PRUNED by the existing entries' sidecars — on a
-    * fresh-doc feed no prior bytes are read and no mirror is written.
-    * `firstEpochFeatures` is established on an EMPTY index only (see
-    * [[IndexManifest.features]]) so a resumed legacy dir keeps reading
-    * through its fallback path instead of trusting mirrors its old
-    * entries never wrote.
+  /** Minhash signature frames (and only they) carry the buckets/ side
+    * table; the other modalities on this layer have no band buckets.
+    */
+  private def carriesBuckets(df: DataFrame, keyCol: String): Boolean =
+    keyCol == "doc_id" && df.columns.contains("mh_0")
+
+  /** Move a finished tmp artifact to its published path, replacing a
+    * crashed attempt's orphan if one is there.
+    */
+  private def publish(tmp: Path, dst: Path): Unit = {
+    graft.FsUtil.deleteTree(dst)
+    Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Storage-layer append shared by every modality: commit `df`
+    * (already carrying `_sig_epoch`) as `epochId` with its mirror set —
+    * the entry's key Bloom sidecar and its resigned/ list (keys this
+    * epoch re-signs or tombstones that the index already holds), plus
+    * the buckets/ side table of a minhash signature frame. Idempotent:
+    * a redelivered epoch returns false and writes nothing; a crashed
+    * attempt's orphans are overwritten by the retry — only the manifest
+    * defines existence. [[MirrorFeature]] is established on an EMPTY
+    * index only (see [[IndexManifest.features]]).
     */
   private[operators] def appendFrameWithMirrors(
       spark: SparkSession, dir: String, epochId: Long, df: DataFrame,
-      firstEpochFeatures: List[String],
       keyCol: String = "doc_id",
       keysAreDistinct: Boolean = false): Boolean = {
-    val m = loadManifest(dir)
+    val m = requireMirrors(dir, loadManifest(dir))
     if (m.isCommitted(epochId)) return false
     val rel = s"sigs/epoch=$epochId"
+    // one pass over the input: write the rows, then derive every side
+    // artifact from the WRITTEN parquet
     Files.createDirectories(sigsRoot(dir))
     val tmpSigs = sigsRoot(dir).resolve(s".tmp-epoch-$epochId")
     df.write.mode("overwrite").parquet(tmpSigs.toString)
     val back = spark.read.parquet(tmpSigs.toString)
-    // Bloom sidecar and resigned-overlap probe are independent jobs
-    // over the written parquet — overlap them (guide §2.6; the probe
-    // reads only PRIOR entries' sidecars, never this epoch's).
+    val tmpB =
+      if (carriesBuckets(back, keyCol))
+        Some(bucketsRoot(dir).resolve(s".tmp-epoch-$epochId"))
+      else None
     val tmpRRef = new java.util.concurrent.atomic.AtomicReference[Option[Path]](None)
-    inParallel(Seq(
+    // The side artifacts share no state — they run as concurrent jobs
+    // ([[inParallel]]) so the append's wall is the slowest of them, not
+    // their sum (guide §2.6; each is a small job whose scheduling/commit
+    // tail would otherwise leave executors idle).
+    inParallel(tmpB.toSeq.map(tmp => () => {
+      // buckets/: band rows partitioned by directory bucket — the
+      // fold's pruned+broadcast candidate join reads only matching sb
+      // dirs
+      Files.createDirectories(bucketsRoot(dir))
+      bucketRows(back).write.mode("overwrite")
+        .partitionBy("sb").parquet(tmp.toString)
+    }) ++ Seq(
+      // bloom/: the entry's key set as a serialized Bloom sidecar —
+      // prunes every FUTURE epoch's resigned-overlap scan (below) to
+      // the entries that might share a key with it
       () => writeBloomSidecar(dir, rel, back, keyCol, keysAreDistinct),
+      // resigned/: (key, last = this epoch) for keys the index already
+      // knows — a narrow key-column scan of the prior entries the
+      // PRIOR sidecars say might overlap (the probe never reads this
+      // epoch's sidecar), so on a fresh-key feed NO prior bytes are
+      // read and no mirror is written (absence reads as empty)
       () => {
         val overlap = overlappingEntries(spark, dir, m.entries,
           back.select(col(keyCol)), keyCol)
@@ -466,41 +426,17 @@ object DedupIndex {
           else tmpRRef.set(Some(tmp))
         }
       }))
-    val tmpR = tmpRRef.get()
-    def publish(tmp: Path, r: String): Unit = {
-      val dst = Paths.get(dir, r)
-      graft.FsUtil.deleteTree(dst)
-      Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-    }
-    tmpR.foreach(publish(_, rel.replaceFirst("^sigs/", "resigned/")))
-    publish(tmpSigs, rel)
+    // publish every side artifact, then the rows, then commit — a crash
+    // before the manifest swap leaves only orphans the retry overwrites
+    def mirror(root: String) = Paths.get(dir, rel.replaceFirst("^sigs/", root))
+    tmpB.foreach(publish(_, mirror("buckets/")))
+    tmpRRef.get().foreach(publish(_, mirror("resigned/")))
+    publish(tmpSigs, Paths.get(dir, rel))
     val features =
-      if (m.entries.isEmpty) (m.features ++ firstEpochFeatures).distinct
+      if (m.entries.isEmpty) (m.features :+ MirrorFeature).distinct
       else m.features
     commitManifest(dir, IndexManifest(m.version + 1,
       m.entries :+ IndexEntry(epochId, epochId, rel), features),
-      m.version)
-    true
-  }
-
-  /** Storage-layer append shared by the signature modalities
-    * ([[DedupIndex]] minhash, [[EmbeddingIndex]] vectors): commit `df`
-    * (already carrying `_sig_epoch`) as `epochId` under the manifest
-    * protocol.
-    */
-  private[operators] def appendFrame(dir: String, epochId: Long,
-                                     df: DataFrame): Boolean = {
-    val m = loadManifest(dir)
-    if (m.isCommitted(epochId)) return false
-    val rel = s"sigs/epoch=$epochId"
-    val dst = Paths.get(dir, rel)
-    Files.createDirectories(sigsRoot(dir))
-    val tmp = sigsRoot(dir).resolve(s".tmp-epoch-$epochId")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    graft.FsUtil.deleteTree(dst) // crashed-attempt orphan, if any
-    Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-    commitManifest(dir, IndexManifest(m.version + 1,
-      m.entries :+ IndexEntry(epochId, epochId, rel), m.features),
       m.version)
     true
   }
@@ -570,7 +506,7 @@ object DedupIndex {
     *  - the merged range carries a combined resigned/ list (max `last`
     *    per doc over its epochs' lists): rows in entries OLDER than
     *    `lo` that were superseded by a re-sign inside [lo, hi] are
-    *    dropped at fold time by that list ([[dropSuperseded]]), and
+    *    dropped at fold time by that list ([[liveRows]]), and
     *    the broadcast-filter path never consults per-epoch lists of a
     *    merged range again.
     * When lo IS the global min, both full-prefix simplifications apply
@@ -609,21 +545,15 @@ object DedupIndex {
       else folded
     kept.write.mode("overwrite").parquet(tmp.toString)
     val dst = Paths.get(dir, rel)
-    graft.FsUtil.deleteTree(dst)
-    Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
+    publish(tmp, dst)
     // minhash indexes also fold the buckets/ side table (tombstone rows
-    // produce no bucket rows). Other modalities on this shared layer
-    // (simhash/embedding/shingle/cluster/metrics state) carry no
-    // buckets side.
-    if (keyCol == "doc_id" && folded.columns.contains("mh_0")) {
-      val bRel = rel.replaceFirst("^sigs/", "buckets/")
+    // produce no bucket rows)
+    if (carriesBuckets(folded, keyCol)) {
       val bTmp = bucketsRoot(dir).resolve(s".tmp-compact-${m.version + 1}")
       Files.createDirectories(bucketsRoot(dir))
       bucketRows(spark.read.parquet(dst.toString))
         .write.mode("overwrite").partitionBy("sb").parquet(bTmp.toString)
-      val bDst = Paths.get(dir, bRel)
-      graft.FsUtil.deleteTree(bDst)
-      Files.move(bTmp, bDst, StandardCopyOption.ATOMIC_MOVE)
+      publish(bTmp, Paths.get(dir, rel.replaceFirst("^sigs/", "buckets/")))
     }
     // merged bloom sidecar: recomputed over the folded output whenever
     // any source entry carried one (an index that never wrote sidecars
@@ -641,9 +571,7 @@ object DedupIndex {
         spark.read.parquet(lists: _*)
           .groupBy(col(keyCol)).agg(max(col("last")).as("last"))
           .write.mode("overwrite").parquet(rTmp.toString)
-        val rDst = Paths.get(dir, rel.replaceFirst("^sigs/", "resigned/"))
-        graft.FsUtil.deleteTree(rDst)
-        Files.move(rTmp, rDst, StandardCopyOption.ATOMIC_MOVE)
+        publish(rTmp, Paths.get(dir, rel.replaceFirst("^sigs/", "resigned/")))
       }
     }
     val merged = (sorted.filterNot(run.contains) :+
@@ -770,38 +698,21 @@ object DedupIndex {
     deleted
   }
 
-  /** Latest signature per doc — the index's LWW over `_sig_epoch`. One
-    * narrow HashAggregate + equi-join; a no-op when every doc was
-    * signed once (the batch dd08/dd09 shape).
+  /** Latest row per key — the LWW over `_sig_epoch` that
+    * [[compactRange]] bakes into a merged range's storage. One narrow
+    * HashAggregate + equi-join over the range being rewritten.
     */
-  private[operators] def latestSigs(sigs: DataFrame,
-                                    keyCol: String = "doc_id"): DataFrame = {
+  private def latestSigs(sigs: DataFrame, keyCol: String): DataFrame = {
     val latest = sigs.groupBy(col(keyCol))
       .agg(max(col("_sig_epoch")).as("_sig_epoch"))
     sigs.join(latest, Seq(keyCol, "_sig_epoch"))
   }
 
-  /** Near-dup candidate pairs of epoch `epochId` against itself AND the
-    * strictly-older index epochs, with minhash-estimated Jaccard —
-    * byte-identical semantics to the batch [[DedupQueries
-    * .minhashLshPairs]] restricted to pairs whose younger side is in
-    * this epoch. Pairs are (doc_a < doc_b)-oriented regardless of which
-    * side is the new document.
-    *
-    * Re-signed docs (same doc_id in an older epoch — an updated url on
-    * the streaming path) participate ONLY through their LATEST
-    * signature: the logical index content is one signature per doc, so
-    * the prior side drops both superseded versions and docs re-signed
-    * by THIS epoch. Without that, a doc's two signature rows would
-    * self-collide on every band and the est join-back would emit
-    * duplicate pairs with conflicting estimates.
-    */
   /** Entries strictly older than `epochId`, coverage-checked the same
     * way [[readSigs]] checks: every committed epoch < epochId must
     * resolve from them.
     */
-  private[operators] def priorEntries(dir: String, epochId: Long): List[IndexEntry] = {
-    val m = loadManifest(dir)
+  private def priorEntries(m: IndexManifest, epochId: Long): List[IndexEntry] = {
     val sel = m.entries.filter(_.maxEpoch < epochId)
     val covered = sel.flatMap(e => e.minEpoch to e.maxEpoch).toSet
     val want = m.epochs.filter(_ < epochId).toSet
@@ -811,16 +722,27 @@ object DedupIndex {
     sel
   }
 
-  /** The union of prior entries' resigned/ lists relevant to a fold of
-    * `epochId` — (doc_id, last) rows marking docs re-signed or
-    * tombstoned at epoch `last`. Usually tiny (a web feed re-signs the
-    * handful of urls that changed); ALWAYS broadcastable, because its
-    * size is bounded by re-sign traffic, not corpus size. Each entry's
-    * list lives at the resigned/ mirror of its sigs path: singleton
-    * epochs write theirs at append, [[compactRange]] carries a merged
-    * range's combined list forward, and a full-PREFIX compaction has
-    * none (supersession baked into storage — the mirror simply does
-    * not exist and is skipped).
+  /** Mirror ABSENCE reads as "no re-signs" only on an index whose every
+    * entry wrote its mirror, so a non-empty manifest without
+    * [[MirrorFeature]] (written before the mirrors existed) is refused
+    * rather than read or appended to.
+    */
+  private def requireMirrors(dir: String, m: IndexManifest): IndexManifest = {
+    require(m.entries.isEmpty || m.features.contains(MirrorFeature),
+      s"index at $dir predates resigned/ mirrors (manifest v${m.version} " +
+        s"lacks the '$MirrorFeature' feature) - rebuild it")
+    m
+  }
+
+  /** The union of `entries`' resigned/ lists — (key, last) rows marking
+    * keys re-signed or tombstoned at epoch `last`. Usually tiny (a web
+    * feed re-signs the handful of urls that changed); ALWAYS
+    * broadcastable, because its size is bounded by re-sign traffic, not
+    * corpus size. Each entry's list lives at the resigned/ mirror of its
+    * sigs path: singleton epochs write theirs at append,
+    * [[compactRange]] carries a merged range's combined list forward,
+    * and a full-PREFIX compaction has none (supersession baked into
+    * storage — the mirror simply does not exist and is skipped).
     */
   private[operators] def resignedLists(spark: SparkSession, dir: String,
                             entries: Seq[IndexEntry]): Option[DataFrame] = {
@@ -831,23 +753,47 @@ object DedupIndex {
   }
 
   /** Drop rows of `df` (carrying `_sig_epoch`) superseded by a later
-    * re-sign/tombstone: (a) docs touched by the folding epoch itself
-    * (`newDocs` — includes tombstones), (b) docs a prior singleton
-    * epoch re-signed after this row's `_sig_epoch`. Both filters are
-    * BROADCAST anti-joins — no shuffle of the index side, which is the
-    * point: the legacy path resolved latest-per-doc with a full-index
-    * groupBy (one wide shuffle per fold).
+    * re-sign/tombstone: (a) keys in `exclude` (the folding epoch's own
+    * key set — includes tombstones), (b) keys a `resigned` list marks
+    * re-signed after the row's `_sig_epoch`. Both filters are BROADCAST
+    * anti-joins — no shuffle of the index side.
     */
-  private[operators] def dropSuperseded(df: DataFrame, newDocs: DataFrame,
-                             resigned: Option[DataFrame],
-                             keyCol: String = "doc_id"): DataFrame = {
-    val a = df.join(broadcast(newDocs), Seq(keyCol), "left_anti")
-    resigned match {
-      case None => a
-      case Some(r) => a.as("b").join(broadcast(r).as("r"),
-          col(s"b.$keyCol") === col(s"r.$keyCol") &&
-            col("r.last") > col("b._sig_epoch"), "left_anti")
-    }
+  private[operators] def dropSuperseded(df: DataFrame,
+                                        exclude: Option[DataFrame],
+                                        resigned: Option[DataFrame],
+                                        keyCol: String): DataFrame = {
+    val a = exclude.fold(df)(x => df.join(broadcast(x), Seq(keyCol), "left_anti"))
+    resigned.fold(a)(r => a.as("b").join(broadcast(r).as("r"),
+      col(s"b.$keyCol") === col(s"r.$keyCol") &&
+        col("r.last") > col("b._sig_epoch"), "left_anti"))
+  }
+
+  /** The supersession resolver every maintained index reads its live
+    * state through: the rows of the committed entries strictly older
+    * than `before` (every entry when None) that no later re-sign or
+    * tombstone superseded — the index's latest-per-key LWW, resolved by
+    * [[dropSuperseded]]'s broadcast anti-joins against `exclude` and
+    * the selected entries' resigned/ lists. An entry's own list marks
+    * keys ITS epochs re-signed from even-older entries; its own rows
+    * carry those epochs as `_sig_epoch`, so `last > _sig_epoch` never
+    * drops them — passing every selected entry's list is safe. `read`
+    * maps the selected entries to the frame to filter: their rows by
+    * default, the pruned buckets/ scan for the minhash fold. None when
+    * no entry is selected; a pre-mirror index fails loud
+    * ([[requireMirrors]]).
+    */
+  private[operators] def liveRows(spark: SparkSession, dir: String,
+                                  before: Option[Long],
+                                  exclude: Option[DataFrame] = None,
+                                  keyCol: String = "doc_id")(
+      read: List[IndexEntry] => DataFrame = entries =>
+        spark.read.parquet(entries.map(e => s"$dir/${e.path}"): _*))
+      : Option[DataFrame] = {
+    val m = requireMirrors(dir, loadManifest(dir))
+    val entries = before.fold(m.entries)(priorEntries(m, _))
+    if (entries.isEmpty) None
+    else Some(dropSuperseded(read(entries), exclude,
+      resignedLists(spark, dir, entries), keyCol))
   }
 
   /** Near-dup candidate pairs of epoch `epochId` against itself AND the
@@ -861,92 +807,54 @@ object DedupIndex {
     * the streaming path) participate ONLY through their LATEST
     * signature: the logical index content is one signature per doc.
     *
-    * Default (`useBuckets = true`) is the DIRECTORY-BUCKETED fold, the
-    * cluster layout wired for real (round-4 verdict missing #3):
+    * The fold is DIRECTORY-BUCKETED (round-4 verdict missing #3):
     *  - the index candidate side reads ONLY the buckets/ sb dirs the
     *    epoch's own band-buckets hash into (leaf paths pinned at plan
     *    time — [[bucketLeafDirs]]);
     *  - the epoch side (bounded: it is one epoch's band rows) is
     *    BROADCAST into the candidate join, so the index side crosses
     *    zero exchanges end-to-end;
-    *  - latest-per-doc resolution is two broadcast anti-joins against
-    *    the epoch's doc set and the tiny resigned/ lists
-    *    ([[dropSuperseded]]) instead of a full-index groupBy shuffle;
+    *  - latest-per-doc resolution is [[liveRows]]' broadcast anti-joins
+    *    against the epoch's doc set and the tiny resigned/ lists, on
+    *    both the bucket scan and the prior sigs;
     *  - the est join-back broadcasts the pairs-bounded candidate set
     *    against the narrow prior sigs scan.
     * Net: the only shuffles left in a fold are over EPOCH-sized or
     * PAIRS-bounded data; nothing index-sized is ever exchanged.
-    * `useBuckets = false` keeps the round-4 shape (recompute buckets
-    * from sigs + groupBy latest) as the bench control and equivalence
-    * regression anchor.
     */
-  def epochPairs(spark: SparkSession, dir: String, epochId: Long,
-                 useBuckets: Boolean = true): DataFrame = {
-    val priors = priorEntries(dir, epochId)
+  def epochPairs(spark: SparkSession, dir: String, epochId: Long): DataFrame = {
     val newAll = readSigs(spark, dir, Seq(epochId))
     // tombstone rows (deleted docs, all-null signature) participate only
     // in the EXCLUSION below — they generate no buckets and no pairs
     val newSigs = newAll.filter(col("mh_0").isNotNull)
-    val newDocs = newAll.select(col("doc_id"))
+    val newDocs = Some(newAll.select(col("doc_id")))
     val newB = DedupQueries.sigBuckets(newSigs)
     val within = newB.as("x").join(newB.as("y"),
         col("x.band") === col("y.band") && col("x.bkt") === col("y.bkt") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-    // prior LIVE sigs (for the est join-back, and — legacy path — the
-    // candidate join): latest-per-doc, minus docs this epoch re-signed
-    // or deleted, minus docs whose latest prior row is a tombstone
-    val resigned = resignedLists(spark, dir, priors)
-    val priorLive =
-      if (priors.isEmpty) None
-      else if (useBuckets)
-        // broadcast-filter supersession — no groupBy over the index
-        Some(dropSuperseded(
-          spark.read.parquet(priors.map(e => s"$dir/${e.path}"): _*)
-            .filter(col("mh_0").isNotNull), newDocs, resigned))
-      else
-        Some(latestSigs(readSigs(spark, dir,
-            priors.flatMap(e => e.minEpoch to e.maxEpoch)))
-          .filter(col("mh_0").isNotNull)
-          .join(newDocs, Seq("doc_id"), "left_anti"))
+    // prior LIVE sigs (for the est join-back): minus docs this epoch
+    // re-signed or deleted, minus docs whose latest prior row is a
+    // tombstone
+    val priorLive = liveRows(spark, dir, Some(epochId), newDocs)()
+      .map(_.filter(col("mh_0").isNotNull))
     val cand0 = priorLive match {
       case None => within
       case Some(pl) =>
-        val oldB =
-          if (useBuckets) {
-            // pruned index bucket scan: only the sb dirs this epoch's
-            // bands hash into, resolved from directory listings (no
-            // Spark job), pinned as leaf paths
-            val eEntry = loadManifest(dir).entries
-              .find(e => e.minEpoch == epochId && e.maxEpoch == epochId)
-              .getOrElse(sys.error(s"epoch $epochId has no singleton entry"))
+        // pruned index bucket scan: only the sb dirs this epoch's bands
+        // hash into, resolved from directory listings (no Spark job),
+        // pinned as leaf paths
+        val eEntry = loadManifest(dir).entries
+          .find(e => e.minEpoch == epochId && e.maxEpoch == epochId)
+          .getOrElse(sys.error(s"epoch $epochId has no singleton entry"))
+        val sbs = entrySbs(dir, eEntry)
+        val oldB = liveRows(spark, dir, Some(epochId), newDocs)(priors =>
+          priors.flatMap(e => bucketLeafDirs(dir, e, sbs)) match {
             // a tombstone-only epoch legitimately writes zero sb dirs
-            // (no live sigs → no candidates); a MISSING buckets root
-            // means the index predates the bucketed layout — fail loud
-            // rather than silently dropping all cross-epoch pairs
-            require(Files.exists(Paths.get(dir,
-                eEntry.path.replaceFirst("^sigs/", "buckets/"))),
-              s"index at $dir has no buckets/ layout for epoch " +
-                s"$epochId - rebuild it, or fold with useBuckets=false")
-            // mixed-era guard (round-5 advice): bucketLeafDirs filters
-            // by Files.exists, so a PRIOR entry written before the
-            // bucketed layout would silently contribute zero candidate
-            // paths — dropping all cross-epoch pairs against it. Every
-            // prior entry must carry a buckets/ root (an entry with no
-            // live sigs still publishes the dir); fail loud otherwise.
-            val legacyPriors = priors.filterNot(e => Files.exists(
-              Paths.get(dir, e.path.replaceFirst("^sigs/", "buckets/"))))
-            require(legacyPriors.isEmpty,
-              s"index at $dir has no buckets/ layout for prior " +
-                s"entries ${legacyPriors.map(_.path).mkString(", ")} - " +
-                "rebuild it, or fold with useBuckets=false")
-            val sbs = entrySbs(dir, eEntry)
-            val paths = priors.flatMap(e => bucketLeafDirs(dir, e, sbs))
-            if (paths.isEmpty)
-              bucketRows(pl.limit(0)).drop("sb")
-            else dropSuperseded(spark.read.parquet(paths: _*),
-              newDocs, resigned)
-          } else DedupQueries.sigBuckets(pl)
+            // (no live sigs → no candidates)
+            case Nil => bucketRows(pl.limit(0)).drop("sb")
+            case paths => spark.read.parquet(paths: _*)
+          }).get
         // defense in depth: the prior side excludes this epoch's docs,
         // so equal ids cannot meet — keep the guard anyway. Epoch side
         // broadcast: one epoch's band rows vs an index-sized probe.

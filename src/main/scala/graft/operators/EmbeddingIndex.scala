@@ -10,14 +10,14 @@ import graft.analytics.{DedupQueries, Hashing}
   * sign-LSH candidates + exact-cosine verify as the batch op
   * (DedupQueries.embeddingNearDupPairs), at epoch-sized cost. Storage
   * and exactly-once/compaction/vacuum semantics are the SHARED
-  * manifest layer in DedupIndex (appendFrame/readSigs/compact/
-  * autoMaintain with keyCol = vec_id) — one commit protocol, two
-  * signature modalities. A vector row (vec_id, 64 floats, ~270 B) IS
+  * manifest layer in DedupIndex (appendFrameWithMirrors/readSigs/
+  * liveRows/compact/autoMaintain with keyCol = vec_id) — one commit
+  * protocol for every maintained modality. A vector row (vec_id, 64 floats, ~270 B) IS
   * its own signature: candidates and the exact-cosine verify both come
   * from the stored row, so the index never re-reads the source table.
   *
   * Re-embedded vecs (same vec_id in a later epoch) supersede their
-  * older vector exactly like re-signed docs (latest-per-vec resolution).
+  * older vector exactly like re-signed docs (the resigned/ mirror).
   */
 object EmbeddingIndex {
 
@@ -32,8 +32,7 @@ object EmbeddingIndex {
     DedupIndex.appendFrameWithMirrors(spark, dir, epochId,
       vecs.select(col("vec_id"), col("embedding"))
         .withColumn("_sig_epoch", lit(epochId)),
-      List(DedupIndex.MirrorFeature), keyCol = "vec_id",
-      keysAreDistinct = true)
+      keyCol = "vec_id", keysAreDistinct = true)
 
   private def bucketed(s: SparkSession, vecs: DataFrame): DataFrame = {
     val tblCols = (0 until DedupQueries.NearDupTables).map { t =>
@@ -52,8 +51,7 @@ object EmbeddingIndex {
     * cumulative corpus (spec-pinned).
     */
   def epochPairs(spark: SparkSession, dir: String, epochId: Long,
-                 minCos: Double, forceLegacy: Boolean = false): DataFrame = {
-    val prior = DedupIndex.committedEpochs(dir).filter(_ < epochId)
+                 minCos: Double): DataFrame = {
     val newV = DedupIndex.readSigs(spark, dir, Seq(epochId))
     val newB = bucketed(spark, newV)
     val within = newB.as("x").join(newB.as("y"),
@@ -61,22 +59,10 @@ object EmbeddingIndex {
           col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"),
         col("x.v").as("va"), col("y.v").as("vb"))
-    val mirrored = !forceLegacy && DedupIndex.loadManifest(dir)
-      .features.contains(DedupIndex.MirrorFeature)
-    val all =
-      if (prior.isEmpty) within
-      else {
-        val priorLive =
-          if (mirrored) {
-            val entries = DedupIndex.priorEntries(dir, epochId)
-            DedupIndex.dropSuperseded(
-              spark.read.parquet(entries.map(e => s"$dir/${e.path}"): _*),
-              newV.select(col("vec_id")),
-              DedupIndex.resignedLists(spark, dir, entries),
-              keyCol = "vec_id")
-          } else DedupIndex
-            .latestSigs(DedupIndex.readSigs(spark, dir, prior), "vec_id")
-            .join(newV.select(col("vec_id")), Seq("vec_id"), "left_anti")
+    val all = DedupIndex.liveRows(spark, dir, Some(epochId),
+        Some(newV.select(col("vec_id"))), keyCol = "vec_id")() match {
+      case None => within
+      case Some(priorLive) =>
         val oldB = bucketed(spark, priorLive)
         val cross = newB.as("x").join(oldB.as("y"),
             col("x.tbl") === col("y.tbl") && col("x.bkt") === col("y.bkt") &&
@@ -88,7 +74,7 @@ object EmbeddingIndex {
             when(col("x.vec_id") < col("y.vec_id"), col("y.v"))
               .otherwise(col("x.v")).as("vb"))
         within.unionByName(cross)
-      }
+    }
     all
       .select(col("id_a"), col("id_b"),
         round(graft.plans.VectorFunctions.vec_cosine(spark,

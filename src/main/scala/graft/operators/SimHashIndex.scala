@@ -25,7 +25,7 @@ object SimHashIndex {
                   docs: DataFrame): Boolean =
     DedupIndex.appendFrameWithMirrors(spark, dir, epochId,
       DedupQueries.simhash(docs).withColumn("_sig_epoch", lit(epochId)),
-      List(DedupIndex.MirrorFeature), keysAreDistinct = true)
+      keysAreDistinct = true)
 
   private def bucketed(sigs: DataFrame): DataFrame = {
     val bandCols = (0 until 4).map(b =>
@@ -43,8 +43,7 @@ object SimHashIndex {
     * output on the cumulative corpus.
     */
   def epochPairs(spark: SparkSession, dir: String, epochId: Long,
-                 maxDist: Int, forceLegacy: Boolean = false): DataFrame = {
-    val prior = DedupIndex.committedEpochs(dir).filter(_ < epochId)
+                 maxDist: Int): DataFrame = {
     val newS = DedupIndex.readSigs(spark, dir, Seq(epochId))
     val newB = bucketed(newS)
     val within = newB.as("x").join(newB.as("y"),
@@ -52,21 +51,10 @@ object SimHashIndex {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
         bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
-    val mirrored = !forceLegacy && DedupIndex.loadManifest(dir)
-      .features.contains(DedupIndex.MirrorFeature)
-    val all =
-      if (prior.isEmpty) within
-      else {
-        val priorLive =
-          if (mirrored) {
-            val entries = DedupIndex.priorEntries(dir, epochId)
-            DedupIndex.dropSuperseded(
-              spark.read.parquet(entries.map(e => s"$dir/${e.path}"): _*),
-              newS.select(col("doc_id")),
-              DedupIndex.resignedLists(spark, dir, entries))
-          } else DedupIndex
-            .latestSigs(DedupIndex.readSigs(spark, dir, prior))
-            .join(newS.select(col("doc_id")), Seq("doc_id"), "left_anti")
+    val all = DedupIndex.liveRows(spark, dir, Some(epochId),
+        Some(newS.select(col("doc_id"))))() match {
+      case None => within
+      case Some(priorLive) =>
         val cross = newB.as("x").join(bucketed(priorLive).as("y"),
             col("x.band") === col("y.band") && col("x.bkt") === col("y.bkt") &&
               col("x.doc_id") =!= col("y.doc_id"))
@@ -74,7 +62,7 @@ object SimHashIndex {
             greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"),
             bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
         within.unionByName(cross)
-      }
+    }
     all.distinct().filter(col("hamming") <= maxDist)
   }
 

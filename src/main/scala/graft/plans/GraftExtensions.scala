@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -31,5 +31,22 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "topk_by_score(score, id, k) - k best (score, id) pairs per group " +
           "under (score DESC, id ASC), as ARRAY<STRUCT<id, score>> in rank order"),
       (exprs: Seq[Expression]) => TopKFunctions.build(exprs)))
+  }
+}
+
+object GraftExtensions {
+  /** Register `name` on the session unless it is already there — by an
+    * earlier call, or by this extension. The Column constructors
+    * ([[VectorFunctions]], [[LwwFunctions]], [[TopKFunctions]]) call
+    * this on every use, and replacing a registered function logs a
+    * WARN each time.
+    */
+  private[plans] def installOnce(spark: SparkSession, name: String)(
+      builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    registry.synchronized {
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 }

@@ -76,8 +76,8 @@ case class LwwSeq(ts: Expression, seqE: Expression) extends DeclarativeAggregate
   */
 object LwwFunctions {
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lww_seq", exprs => LwwSeq(exprs(0), exprs(1)), "built-in")
+    GraftExtensions.installOnce(spark, "lww_seq")(
+      exprs => LwwSeq(exprs(0), exprs(1)))
 
   def lww_seq(spark: SparkSession, ts: Column, seq: Column): Column = {
     register(spark)

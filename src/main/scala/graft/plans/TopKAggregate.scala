@@ -186,8 +186,7 @@ object TopKFunctions {
     })
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_by_score", build, "built-in")
+    GraftExtensions.installOnce(spark, "topk_by_score")(build)
 
   def topk_by_score(spark: SparkSession, score: Column, id: Column, k: Int): Column = {
     register(spark)

@@ -135,10 +135,10 @@ case class VecCosine(left: Expression, right: Expression) extends VecBinaryExpre
 object VectorFunctions {
   /** Register `vec_dot` / `vec_cosine` on the session (idempotent). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_cosine", exprs => VecCosine(exprs(0), exprs(1)), "built-in")
+    GraftExtensions.installOnce(spark, "vec_dot")(
+      exprs => VecDot(exprs(0), exprs(1)))
+    GraftExtensions.installOnce(spark, "vec_cosine")(
+      exprs => VecCosine(exprs(0), exprs(1)))
   }
 
   def vec_dot(spark: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column = {

@@ -1,17 +1,17 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import graft.analytics.DedupQueries
 import graft.operators.DedupIndex
 
 /** The directory-bucketed fold layout (round-4 verdict missing #3):
   * an epoch fold's index candidate side must read ONLY the buckets/ sb
   * dirs the epoch's own band-buckets hash into, must cross zero
-  * shuffles, and must stay pair-for-pair equal to the legacy fold shape
-  * (recompute buckets from sigs + full-index latest-per-doc groupBy)
-  * under re-signs, deletes and compaction.
+  * shuffles, and must stay pair-for-pair equal to the batch MinHash+LSH
+  * op over the live corpus under re-signs, deletes and compaction.
   */
 class BucketedFoldSpec extends SparkSpec {
 
@@ -56,7 +56,9 @@ class BucketedFoldSpec extends SparkSpec {
     val dir = tmpDir("bf-noshuffle")
     DedupIndex.appendEpoch(spark, dir, 0L, docs.filter(col("doc_id") % 2 === 0))
     DedupIndex.appendEpoch(spark, dir, 1L, docs.filter(col("doc_id") % 2 === 1))
-    val plan = DedupIndex.epochPairs(spark, dir, 1L).queryExecution.sparkPlan
+    val fold = DedupIndex.epochPairs(spark, dir, 1L)
+    assertNoLatestPerKeyGroupBy(fold, dir)
+    val plan = fold.queryExecution.sparkPlan
     def isIndexScan(p: SparkPlan): Boolean = p match {
       case f: FileSourceScanExec => f.relation.location.rootPaths.exists(rp =>
         rp.toString.contains("/buckets/") || rp.toString.contains("/sigs/epoch=0"))
@@ -85,32 +87,36 @@ class BucketedFoldSpec extends SparkSpec {
     }
   }
 
-  test("bucketed fold == legacy fold under re-signs, deletes and compaction") {
+  test("bucketed fold == batch LSH under re-signs and compaction") {
     val dir = tmpDir("bf-equiv")
-    val e0 = docs.filter(col("doc_id") % 3 === 0)
-    val e1 = docs.filter(col("doc_id") % 3 === 1)
-    val e2 = docs.filter(col("doc_id") % 3 === 2)
-    DedupIndex.appendEpoch(spark, dir, 0L, e0)
-    // epoch 1: new docs + re-sign half of epoch 0's + delete a third
-    val resign = e0.filter(col("doc_id") % 2 === 0)
-    val dels = e0.filter(col("doc_id") % 6 === 3).select(col("doc_id"))
-    DedupIndex.appendEpoch(spark, dir, 1L, e1.unionByName(resign), Some(dels))
-    DedupIndex.appendEpoch(spark, dir, 2L, e2)
-    for (e <- 1L to 2L) {
-      val b = pairSet(DedupIndex.epochPairs(spark, dir, e, useBuckets = true))
-      val l = pairSet(DedupIndex.epochPairs(spark, dir, e, useBuckets = false))
-      assert(b === l, s"epoch $e fold paths diverge")
-      if (e == 2L) assert(b.nonEmpty)
+    // each epoch's fold == batch MinHash+LSH over the corpus live as of
+    // that epoch, restricted to pairs with a side signed in that epoch
+    def check(e: Long, live: Column, signed: Column): Set[(Long, Long, String)] = {
+      val ids = docs.filter(signed).select(col("doc_id")).collect()
+        .map(_.getLong(0)).toSet
+      val batch = pairSet(DedupQueries.minhashLshPairs(docs.filter(live)))
+        .filter { case (a, b, _) => ids(a) || ids(b) }
+      val fold = pairSet(DedupIndex.epochPairs(spark, dir, e))
+      assert(fold === batch, s"epoch $e fold diverges from batch")
+      fold
     }
+    val id = col("doc_id")
+    DedupIndex.appendEpoch(spark, dir, 0L, docs.filter(id % 3 === 0))
+    // epoch 1: new docs + re-sign half of epoch 0's + delete a third
+    DedupIndex.appendEpoch(spark, dir, 1L,
+      docs.filter(id % 3 === 1 || id % 6 === 0),
+      Some(docs.filter(id % 6 === 3).select(id)))
+    DedupIndex.appendEpoch(spark, dir, 2L, docs.filter(id % 3 === 2))
+    check(1L, id % 6 =!= 3 && id % 3 =!= 2, id % 3 === 1 || id % 6 === 0)
+    assert(check(2L, id % 6 =!= 3, id % 3 === 2).nonEmpty)
     // compaction folds the buckets side table too: the fold of a fresh
     // epoch against compacted history still prunes and still matches
     assert(DedupIndex.compact(spark, dir))
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(dir, "buckets", "compact-0-1")))
-    DedupIndex.appendEpoch(spark, dir, 3L, docs.filter(col("doc_id") % 7 === 0))
-    val b3 = pairSet(DedupIndex.epochPairs(spark, dir, 3L, useBuckets = true))
-    val l3 = pairSet(DedupIndex.epochPairs(spark, dir, 3L, useBuckets = false))
-    assert(b3 === l3)
-    assert(b3.nonEmpty, "re-signed docs must still pair after compaction")
+    DedupIndex.appendEpoch(spark, dir, 3L, docs.filter(id % 7 === 0))
+    assert(check(3L, id % 6 =!= 3 || id % 7 === 0, id % 7 === 0).nonEmpty,
+      "re-signed docs must still pair after compaction")
+    graft.analytics.SessionCaches.release(spark)
   }
 }

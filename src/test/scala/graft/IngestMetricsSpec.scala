@@ -125,6 +125,7 @@ class IngestMetricsSpec extends SparkSpec {
       deletes = Some(Seq(Tuple1(2L)).toDF("doc_id")))
     MetricsIndex.appendEpoch(spark, dir, 2L,
       Seq((3L, "theta iota kappa")).toDF("doc_id", "text"))
+    assertNoLatestPerKeyGroupBy(MetricsIndex.readLive(spark, dir), dir)
     val before = MetricsIndex.readLive(spark, dir)
       .collect().map(_.toSeq).toSet
     assert(before.map(_.head) === Set(1L, 3L))

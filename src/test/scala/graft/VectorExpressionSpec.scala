@@ -62,6 +62,36 @@ class VectorExpressionSpec extends SparkSpec {
     assert(math.abs(r.getDouble(1) - 1.0) < 1e-12)
   }
 
+  test("graft SQL functions install once per session") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    // the (info, builder) registration: a replacement always installs a
+    // fresh ExpressionInfo, even when the builder lambda is a cached
+    // non-capturing instance
+    def builder(name: String) = {
+      val reg = spark.sessionState.functionRegistry
+      val id = FunctionIdentifier(name)
+      (reg.lookupFunction(id), reg.lookupFunctionBuilder(id)) match {
+        case (Some(info), Some(b)) => (info, b)
+        case _ => fail(s"$name is not registered")
+      }
+    }
+    def construct(): Unit = {
+      VectorFunctions.vec_cosine(spark, $"a", $"b")
+      graft.plans.LwwFunctions.lww_seq(spark, $"ts", $"seq")
+      graft.plans.TopKFunctions.topk_by_score(spark, $"s", $"id", 3)
+    }
+    val names = Seq("vec_cosine", "lww_seq", "topk_by_score")
+    construct()
+    val first = names.map(builder)
+    // a second construction must keep the registered builder, not
+    // replace it (each replacement logs a WARN)
+    construct()
+    names.zip(first).foreach { case (n, (info, b)) =>
+      val (info2, b2) = builder(n)
+      assert((info2 eq info) && (b2 eq b), s"$n was re-registered")
+    }
+  }
+
   test("agrees with the higher-order-function formulation on real embeddings") {
     val e = graft.analytics.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .select($"vec_id", $"embedding".cast("array<double>").as("v"))
